@@ -141,8 +141,10 @@ def run_incremental_elt(
         "financial_missing_total",
         "parse_failed_cols",
     ).persist()
-    n_errors = normalized.filter(F.col("parse_failed_cols") != "").count()
-    n_norm = normalized.count()
+    failed = F.col("parse_failed_cols") != ""
+    n_norm, n_errors = normalized.agg(  # one job for both counts
+        F.count(F.lit(1)), F.count(F.when(failed, 1))
+    ).first()
     t_norm = time.time() - t0
     logger.info("normalized %d (errors: %d) in %.1fs", n_norm, n_errors, t_norm)
     if n_changed and n_errors / n_changed > ERROR_RATE_WARN:
@@ -260,7 +262,11 @@ def run_load_sheets(
         )
     logger.info("got %d rows; loading into raw", len(records))
     df = records_to_raw_df(spark, records, source)
-    n_dups = df.count() - df.select("payload_hash").distinct().count()
+    # one job for both counts (payload_hash is never null)
+    n_rows, n_hashes = df.agg(
+        F.count(F.lit(1)), F.countDistinct("payload_hash")
+    ).first()
+    n_dups = n_rows - n_hashes
     if n_dups:
         logger.warning(
             "found %d duplicate content hashes; add a unique ID column "
@@ -277,7 +283,7 @@ def run_load_sheets(
         fresh.unpersist()
     else:
         df.write.mode("overwrite").parquet(raw_dir)
-        n = df.count()
+        n = n_rows
     logger.info("loaded %d rows into %s", n, raw_dir)
     return n
 

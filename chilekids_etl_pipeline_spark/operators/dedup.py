@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import HEX, words_sql
+from ..materialize import materialize
 
 
 def exact_duplicates(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -139,7 +140,6 @@ def minhash_bands(
     num_hashes: int = 12,
     band_size: int = 3,
     id_col: str = "doc_id",
-    hashed: bool = False,
 ) -> DataFrame:
     """(doc_id, band, band_sig): Carter-Wegman min-hash per permutation,
     grouped into bands of ``band_size`` and re-hashed to a band signature.
@@ -159,25 +159,13 @@ def minhash_bands(
     naive explode-by-seed form shuffles num_hashes× the shingle volume and
     needs a second aggregation; measured ~2× slower at sf0.1 and far worse
     at scale.)
-
-    ``hashed=True`` takes pre-digested ``(id_col, h1, h2)`` rows instead
-    of shingle strings — the caller pays the md5 exactly once on a
-    materialized narrow table rather than once per consumer subtree
-    (see dedup_minhash_lsh).
     """
-    if hashed:
-        digested = sh.select(
-            F.col(id_col),
-            F.col("h1").alias("__h1"),
-            F.col("h2").alias("__h2"),
-        )
-    else:
-        digested = sh.withColumn("__h", F.md5("shingle")).withColumns(
-            {
-                "__h1": F.expr("cast(conv(substr(__h, 1, 15), 16, 10) AS bigint)"),
-                "__h2": F.expr("cast(conv(substr(__h, 16, 13), 16, 10) AS bigint)"),
-            }
-        )
+    digested = sh.withColumn("__h", F.md5("shingle")).withColumns(
+        {
+            "__h1": F.expr("cast(conv(substr(__h, 1, 15), 16, 10) AS bigint)"),
+            "__h2": F.expr("cast(conv(substr(__h, 16, 13), 16, 10) AS bigint)"),
+        }
+    )
     mins = [
         F.min(F.col("__h1") + F.lit(s) * F.col("__h2")).alias(f"mh{s}")
         for s in range(num_hashes)
@@ -375,6 +363,7 @@ def connected_components_star(
     a_col: str = "doc_a",
     b_col: str = "doc_b",
     max_iter: int = 25,
+    pin: str = "cc_star",
 ) -> DataFrame:
     """(doc_id, component) via alternating large-star / small-star rounds
     (Kiveris et al., "Connected Components in MapReduce and Beyond").
@@ -392,10 +381,15 @@ def connected_components_star(
       neighbors link to the smallest of them
     Both preserve connectivity; edges monotonically contract onto centers.
 
-    Each round the edge set is ``localCheckpoint``-ed: iterative plans
-    otherwise accumulate lineage (plan depth grows per round and the JVM
+    Each round the edge set is checkpointed: iterative plans otherwise
+    accumulate lineage (plan depth grows per round and the JVM
     eventually stack-overflows just printing the tree); checkpointing
     truncates the plan so every round starts from materialized blocks.
+    Rounds alternate between two ``materialize`` names under ``pin``: a
+    round reads only the round before it, so pinning round r releases
+    round r-2. The returned frame reads the last round and the node
+    table, which stay pinned until ``pin`` is built again, so each
+    caller passes its own ``pin``.
     """
     edges0 = (
         pairs.select(F.col(a_col).alias("a"), F.col(b_col).alias("b"))
@@ -403,68 +397,67 @@ def connected_components_star(
         .distinct()
     )
     # orient (a = max, b = min) so round outputs are comparable as sets
-    edges = edges0.select(
-        F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
-    ).distinct().localCheckpoint(eager=True)
+    edges = materialize(
+        edges0.select(
+            F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b")
+        ).distinct(),
+        f"{pin}_edges", eager=True,
+    )
     # derive nodes from the CHECKPOINTED edges (same node set: orientation
     # keeps both endpoints) — deriving from edges0 would re-run the whole
     # upstream pair pipeline (e.g. the MinHash-LSH candidate join) a
     # second time when nodes is first evaluated (round-9 A/B: the second
     # LSH pass was ~40% of dedup_components' wall on the open-vocab corpus)
-    nodes = (
+    nodes = materialize(
         edges.select(F.col("a").alias("doc_id"))
         .union(edges.select("b"))
-        .distinct()
-        .persist()
+        .distinct(),
+        f"{pin}_nodes", eager=False,
     )
-    try:
-        for _ in range(max_iter):
-            sym = edges.union(
-                edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-            )
-            lmin = sym.groupBy("a").agg(F.min("b").alias("mn")).select(
-                "a", F.least("a", "mn").alias("m")
-            )
-            large = (
-                sym.join(lmin, "a")
-                .filter(F.col("b") > F.col("a"))
-                .select(F.col("b").alias("a"), F.col("m").alias("b"))
-                .filter(F.col("a") != F.col("b"))
-                .distinct()
-            )
-            oriented = large.select(
-                F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
-            )
-            smin = oriented.groupBy("u").agg(F.min("v").alias("m"))
-            small = (
-                oriented.join(smin, "u")
-                .select(F.col("v").alias("a"), F.col("m").alias("b"))
-                .union(smin.select(F.col("u").alias("a"), F.col("m").alias("b")))
-                .filter(F.col("a") != F.col("b"))
-                .distinct()
-                .select(F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b"))
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-            changed = (
-                small.subtract(edges).union(edges.subtract(small)).limit(1).count()
-            )
-            edges.unpersist()
-            edges = small
-            if changed == 0:
-                break
-        else:
-            raise RuntimeError(
-                f"connected_components_star did not converge within {max_iter} rounds"
-            )
-        return (
-            edges.select(F.col("a").alias("doc_id"), F.col("b").alias("component"))
-            .union(nodes.select("doc_id", F.col("doc_id").alias("component")))
-            .groupBy("doc_id")
-            .agg(F.min("component").alias("component"))
+    for r in range(max_iter):
+        sym = edges.union(
+            edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
         )
-    finally:
-        nodes.unpersist()
+        lmin = sym.groupBy("a").agg(F.min("b").alias("mn")).select(
+            "a", F.least("a", "mn").alias("m")
+        )
+        large = (
+            sym.join(lmin, "a")
+            .filter(F.col("b") > F.col("a"))
+            .select(F.col("b").alias("a"), F.col("m").alias("b"))
+            .filter(F.col("a") != F.col("b"))
+            .distinct()
+        )
+        oriented = large.select(
+            F.greatest("a", "b").alias("u"), F.least("a", "b").alias("v")
+        )
+        smin = oriented.groupBy("u").agg(F.min("v").alias("m"))
+        small = materialize(
+            oriented.join(smin, "u")
+            .select(F.col("v").alias("a"), F.col("m").alias("b"))
+            .union(smin.select(F.col("u").alias("a"), F.col("m").alias("b")))
+            .filter(F.col("a") != F.col("b"))
+            .distinct()
+            .select(F.greatest("a", "b").alias("a"), F.least("a", "b").alias("b"))
+            .distinct(),
+            f"{pin}_{r % 2}", eager=True,
+        )
+        changed = (
+            small.subtract(edges).union(edges.subtract(small)).limit(1).count()
+        )
+        edges = small
+        if changed == 0:
+            break
+    else:
+        raise RuntimeError(
+            f"connected_components_star did not converge within {max_iter} rounds"
+        )
+    return (
+        edges.select(F.col("a").alias("doc_id"), F.col("b").alias("component"))
+        .union(nodes.select("doc_id", F.col("doc_id").alias("component")))
+        .groupBy("doc_id")
+        .agg(F.min("component").alias("component"))
+    )
 
 
 def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..materialize import materialize
 from ..sources.tables import load_table
 from .registry import register
 
@@ -176,17 +177,9 @@ def theta_sketch_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     operations that make sketches composable, the property that lets
     100 TB segment-overlap questions run on kilobytes."""
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    # Materialize the sketch ONCE (r12, guide §2.4/§8 "decide on small
-    # rows"): the pair-algebra template references `sketch` five times,
-    # and the fully-inlined plan re-planned the fact scan per reference
-    # (22 parquet scans / 51 Exchanges, PLAN_AUDIT_r12.json). The sketch
-    # is k x |segments| rows (~320), so the eager checkpoint is
-    # metadata-sized; every algebra join then reads materialized blocks
-    # and the fact table is scanned exactly once.
+    # eager: five template references re-planned the fact scan inlined
     sketch = spark.sql(f"WITH {_theta_sketch_cte('spark')} SELECT * FROM sketch")
-    sketch.localCheckpoint(eager=True).createOrReplaceTempView(
-        "theta_sketch_mat"
-    )
+    materialize(sketch, "theta_sketch_mat", eager=True)
     return spark.sql(_theta_sql("spark", sketch_src="theta_sketch_mat"))
 
 

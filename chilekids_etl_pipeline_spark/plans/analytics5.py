@@ -22,6 +22,7 @@ from ..functions.sketch import (
     hll_shifted_sql,
     hll_w_sql,
 )
+from ..materialize import materialize
 from ..sources.tables import load_table
 from .registry import register
 
@@ -157,21 +158,15 @@ FROM base CROSS JOIN ref
 """
 
 
-def _rfm_sql(dialect: str, rfm_src: str | None = None) -> str:
+def _rfm_sql(dialect: str) -> str:
     if dialect == "spark":
         q = "percentile({c}, array({f}))"
         nbelow = "cast(size(filter({t}, x -> x < {v})) AS int) + 1"
     else:
         q = "quantile_cont({c}, [{f}])"
         nbelow = "cast(len(list_filter({t}, x -> x < {v})) AS int) + 1"
-    # rfm_src lets the Spark side persist the per-customer aggregate
-    # once: the CTE feeds both the threshold row and the final scoring
-    # scan, and SQL inlining would run the orders groupBy twice
-    rfm_body = (
-        f"SELECT * FROM {rfm_src}" if rfm_src else _rfm_base_sql(dialect)
-    )
     return f"""
-WITH rfm AS ({rfm_body}),
+WITH rfm AS ({_rfm_base_sql(dialect)}),
 th AS (
     SELECT {q.format(c='recency_days', f=_RFM_FRACS)} AS tr,
            {q.format(c='frequency', f=_RFM_FRACS)} AS tf,
@@ -205,15 +200,8 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     strictly-less count against them, so the only corpus shuffle is the
     per-customer groupBy. Recency inverts (recent = high score); the
     segment label is the standard 2-axis read of the scores."""
-    # A/B r5 (idle, sf0.1, median of 4): persisted 0.61 s vs inline
-    # 0.81 s — the base aggregate feeds the threshold row AND the final
-    # scoring scan under different exchanges, so the persist is kept.
-    # The r4 driver-bench 2.45 s row was concurrent-load variance
-    # (idle remeasure 0.54-0.66 s).
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    rfm = spark.sql(_rfm_base_sql("spark"))
-    rfm.persist().createOrReplaceTempView("rfm_base_mat")
-    return spark.sql(_rfm_sql("spark", rfm_src="rfm_base_mat"))
+    return spark.sql(_rfm_sql("spark"))
 
 
 # ---------------------------------------------------------------------------
@@ -282,8 +270,8 @@ def order_backlog_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem below the join (see _BACKLOG_SPANS_SPARK)."""
     for t in ("orders", "lineitem"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    spans = spark.sql(_BACKLOG_SPANS_SPARK)
-    spans.persist().createOrReplaceTempView("backlog_spans_mat")
+    # lazy: both delta branches scan the spans
+    materialize(spark.sql(_BACKLOG_SPANS_SPARK), "backlog_spans_mat", eager=False)
     return spark.sql(_backlog_sql("spark", spans_src="backlog_spans_mat"))
 
 

@@ -31,6 +31,7 @@ from ..functions.text import (
     word_len_sum_sql,
     words_sql,
 )
+from ..materialize import materialize
 from ..operators.dedup import (
     connected_components_star,
     drop_hot_shingles,
@@ -130,18 +131,12 @@ _PERTURB_SPARK = "concat(array(element_at(vec, 1) + cast(0.05 AS double)), slice
 
 
 def _vecs_spark(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    # Size-gated widening: the embeddings parquet is 1-2 splits at every
-    # test scale, so the per-row vector lambdas downstream (hyperplane
-    # projections, norms, dot products) starve on 2 of 32 cores without
-    # the widening — dedup_embedding_cosine sf1 A/B: 14.9 -> 6.5 s median.
-    # Below ~2 MB the exchange is pure stage-barrier loss (r10 A/B at
-    # sf0.1: knn +0.45 s, ann_ivf +0.64 s — AB_r8_vs_r10.json), so the
-    # gate skips it there; sf1 (5.2 MB) still widens.
+    # widened above the size gate: the per-row vector lambdas starve on
+    # the 1-2 split embeddings scan (sf1: 14.9 -> 6.5 s)
     base = rebalance_if_big(
         load_table(spark, sf_dir, "embeddings").select(
             "vec_id", F.expr(VEC_AS_DOUBLE).alias("vec")
-        ),
-        min_bytes=2 << 20,
+        )
     )
     planted = (
         base.filter(F.col("vec_id") % 25 == 0)
@@ -236,14 +231,9 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle table is persisted once — it feeds the corpus count, the hot
     set, and the anti-joined pair sides (CTE-inlining lesson).
     """
-    # eager localCheckpoint, not persist: jaccard_pairs reads sh from
-    # five subtrees (df table, corpus count, per-doc counts, both pair
-    # sides) that run as concurrent stages and race a lazily-built
-    # cache into duplicate re-shingles (see
-    # llmdata20.minhash_estimate_error).
-    sh = shingle_rows(_docs_aug_spark(spark, sf_dir)).localCheckpoint(
-        eager=True
-    )
+    # eager: five concurrent consumer stages raced a lazy cache
+    sh = shingle_rows(_docs_aug_spark(spark, sf_dir))
+    sh = materialize(sh, "jaccard_sh_mat", eager=True)
     return jaccard_pairs(
         sh, 0.5, df_cap_denom=_JACCARD_DF_DENOM, df_cap_abs=_JACCARD_DF_ABS
     )
@@ -325,38 +315,17 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     precision on the open-vocab scaling corpus; ~linear with the cap).
     On the driver gate corpora no shingle reaches the cap, so the filter
     is a verified no-op there."""
-    # The filtered shingle table feeds signature generation AND both
-    # sides of the verify join — materialize it once (LSH pipelines
-    # persist/checkpoint the shingle/signature tables for exactly this
-    # reuse). The RAW table is deliberately NOT persisted: its two
-    # consumers re-run the cheap scan+explode, measured faster than a
-    # second cache materialization at every scale.
+    return _minhash_pairs(spark, sf_dir, "minhash_shf_mat")
+
+
+def _minhash_pairs(spark: SparkSession, sf_dir: str, pin: str) -> DataFrame:
+    """dedup_minhash_lsh's pairs, with the filtered shingle table pinned
+    under ``pin`` so each entry that reuses them owns its own pin."""
     sh = shingle_rows(_docs_aug_spark(spark, sf_dir))
-    # lazy persist, deliberately — THREE materialization forms are now
-    # measured and rejected for this entry:
-    # (1) eager localCheckpoint of the WIDE string table: +0.47 s sf0.1
-    #     (AB_r12_batch2), +4.3 s sf1 (AB_r12_mhlsh_sf1) — serialized
-    #     materialization loses to racing recomputes that overlap
-    #     across idle cores;
-    # (2) r13 NARROW restructure (VERDICT r12 #3's suggestion): eager
-    #     checkpoints of the tiny hot set + the (doc_id, h1, h2) md5
-    #     bigints, bands/candidates from the narrow blocks, shingle
-    #     strings re-derived only for candidate docs via a broadcast
-    #     semi-join before the explode, exact string verify. Oracle
-    #     green at 3 SFs, plan 20 → 4 full scans — and still SLOWER:
-    #     +1.48 s median sf0.1 (3/3, AB_r13_batch1.json) and +13.5 s
-    #     median sf1 (AB_r13_batch1_sf1.json). The serial hot→hd→cand
-    #     checkpoint chain replaces 4 RACING pipelines with 2 SERIAL
-    #     ones plus a candidate-pruned third pass, and on an otherwise
-    #     idle machine the racing recomputes are nearly free while
-    #     every checkpoint job pays materialization + barrier latency;
-    # (3) window-count df (one shingle-keyed exchange): hot-key
-    #     straggler at crawl scale, rejected earlier.
-    # The duplicated ~35 executor-seconds are real on a BUSY cluster —
-    # the narrow restructure (kept in git history, commit r13) is the
-    # right shape there — but on every measured local configuration
-    # the racing form wins, and the round rules score measured walls.
-    shf = drop_hot_shingles(sh, df_cap_abs=_MINHASH_DF_ABS).persist()
+    # lazy: racing recomputes beat every checkpoint form measured
+    # (OPTIMIZATION_r13.md, Finding 3)
+    shf = drop_hot_shingles(sh, df_cap_abs=_MINHASH_DF_ABS)
+    shf = materialize(shf, pin, eager=False)
     bands = minhash_bands(shf, num_hashes=12, band_size=3)
     cand = lsh_candidate_pairs(bands)
     return verify_jaccard(cand, shf, 0.5)
@@ -391,8 +360,8 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixpoint with a recursive CTE. Uses the large-star/small-star variant
     (O(log² n) rounds, diameter-independent) — the 100 TB-safe choice when
     near-dup chains can be arbitrarily deep."""
-    pairs = dedup_minhash_lsh(spark, sf_dir)
-    return connected_components_star(pairs)
+    pairs = _minhash_pairs(spark, sf_dir, "components_shf_mat")
+    return connected_components_star(pairs, pin="components_cc")
 
 
 # ---------------------------------------------------------------------------
@@ -462,15 +431,9 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch scales with the corpus, the %10 planted convention here).
     A no-op on the driver gate corpora, like the main entry."""
     sh = shingle_rows(_docs_aug_spark(spark, sf_dir))
-    # lazy persist, deliberately: an eager localCheckpoint of the wide
-    # table A/B-measured +1.40 s median here (AB_r12_batch2), and the
-    # r13 narrow restructure (hot + md5-bigint checkpoints, candidate-
-    # pruned string re-derive — dedup_minhash_lsh's rationale comment
-    # has the full design) measured +1.61 s median sf0.1 (3/3,
-    # AB_r13_batch1.json) and +5.75 s median sf1
-    # (AB_r13_batch1_sf1.json). Overlapping racing recomputes beat
-    # every serialized materialization tried at every measured scale.
-    shf = drop_hot_shingles(sh, df_cap_abs=_MINHASH_DF_ABS).persist()
+    # lazy: as in dedup_minhash_lsh (OPTIMIZATION_r13.md, Finding 3)
+    shf = drop_hot_shingles(sh, df_cap_abs=_MINHASH_DF_ABS)
+    shf = materialize(shf, "incr_shf_mat", eager=False)
     bands = minhash_bands(shf, num_hashes=12, band_size=3)
     new_b = bands.filter(F.col("doc_id") >= PLANT_SENTINEL).select(
         F.col("doc_id").alias("new_id"), "band", "band_sig"
@@ -548,8 +511,8 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected components → per-cluster argmax → keep list."""
     from pyspark.sql import Window
 
-    pairs = dedup_minhash_lsh(spark, sf_dir)
-    comp = connected_components_star(pairs)
+    pairs = _minhash_pairs(spark, sf_dir, "keep_best_shf_mat")
+    comp = connected_components_star(pairs, pin="keep_best_cc")
     docs = _docs_aug_spark(spark, sf_dir).select(
         "doc_id", F.length("text").alias("len")
     )
@@ -693,17 +656,9 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(_TRUNC_SPARK).alias("text"),
     )
     sdocs = docs.unionByName(exact).unionByName(trunc)
-    # The signature table feeds BOTH sides of the block equi-join;
-    # without materialization each side recomputes the full per-doc
-    # hashing pipeline. LAZY persist, measured (idle sf1, round 9):
-    # no-persist 17.2 s, lazy persist 12.9 s, EAGER localCheckpoint
-    # 17.6 s — the lazy cache recovers most of the duplicate sig work
-    # (the two join-input stages race the cache, so not all of it),
-    # while the eager checkpoint serializes sig materialization before
-    # any join stage can overlap and loses the win. The early-hamming-
-    # before-distinct reorder measured no difference, so the shuffle
-    # order stays as documented.
-    sigs = simhash(sdocs).persist()
+    # lazy: both join sides read the signatures; an eager checkpoint
+    # serialized ahead of the joins and lost (sf1: 12.9 s vs 17.6 s)
+    sigs = materialize(simhash(sdocs), "simhash_sigs_mat", eager=False)
     return hamming_near_pairs(sigs, max_hamming=3).withColumn(
         "hamming", F.col("hamming").cast("int")
     )
@@ -1344,22 +1299,10 @@ def bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("b"),
     ).select("doc_id", "b.w1", "b.w2")
-    # cnt2 is materialized once (eager localCheckpoint: the aggregated
-    # count table is vocabulary-sized — orders of magnitude smaller than
-    # the exploded bigram rows) and cnt1 is derived from the blocks:
-    # c1(w1) = Σ_w2 c2(w1, w2) exactly, because every bg row lands in
-    # exactly one (w1, w2) group. This removes a full corpus
-    # tokenize+explode+shuffle (the cnt1 pass). r12 tried the same
-    # derivation WITHOUT the checkpoint and reverted it (+0.27 s 6/6,
-    # AB_r12_bigram_revert.json): AQE never reused the cnt2 exchange
-    # across the two aggregate subtrees, so the plan re-ran the explode
-    # AND gained a (w1,w2)-wide shuffle. Checkpointed blocks are
-    # referenced structurally, so the reuse cannot miss.
-    cnt2 = (
-        bg.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).alias("c2"))
-        .localCheckpoint(eager=True)
-    )
+    # eager: cnt1 derives from the vocabulary-sized cnt2 blocks, which
+    # AQE never reused across the two aggregates when inlined
+    cnt2 = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
+    cnt2 = materialize(cnt2, "lm_cnt2_mat", eager=True)
     cnt1 = cnt2.groupBy("w1").agg(F.sum("c2").alias("c1"))
     vocab = (
         docs.select(F.explode(F.expr(_W_SPARK)).alias("tok"))

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import HEX, words_sql
+from ..materialize import materialize
 from ..operators.dedup import hamming_near_pairs
 from ..sources.tables import load_table
 from .registry import register
@@ -451,14 +452,10 @@ def image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, sf_dir, "documents").createOrReplaceTempView(
         "documents"
     )
-    # the signature table feeds both sides of the block-pair equi-join;
-    # lazy persist so the per-doc hashing pipeline runs once (same
-    # measured rationale as dedup_simhash_pairs' sig persist)
-    sigs = (
-        spark.sql(_dhash_sql("spark", sigs_only=True))
-        .withColumnRenamed("dhash", "simhash")
-        .persist()
-    )
+    # lazy: both join sides read the signatures (as dedup_simhash_pairs)
+    sigs = spark.sql(_dhash_sql("spark", sigs_only=True))
+    sigs = sigs.withColumnRenamed("dhash", "simhash")
+    sigs = materialize(sigs, "dhash_sigs_mat", eager=False)
     return hamming_near_pairs(sigs, max_hamming=3).withColumn(
         "hamming", F.col("hamming").cast("int")
     )

@@ -17,7 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.text import shingles_sql, words_sql
-from ..sources.tables import load_table, maybe_rebalance
+from ..materialize import materialize
+from ..sources.tables import above_size_gate, load_table, maybe_rebalance
 from .registry import register
 
 
@@ -208,53 +209,21 @@ def dedup_yield_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"WITH docs AS ({_yield_docs_cte('spark')}) "
         f"SELECT doc_id, explode({grams_expr}) AS g FROM docs"
     )
-    # eager localCheckpoint, not persist: sh's consumers run as
-    # concurrent stages and raced the not-yet-built cache into duplicate
-    # re-shingles (r12 stage profile: 23.5 + 8.8 executor-seconds);
-    # checkpointed blocks are referenced structurally, so the explode
-    # runs once. (r12 A/B: wash at sf0.1, kept for the structural
-    # guarantee.)
-    sh.localCheckpoint(eager=True).createOrReplaceTempView("yield_sh_mat")
-    # toks materialized too (r12): drop_stats, corpus_words, and the
-    # df-cap's corpus count each re-ran the docs-union tokenize when
-    # inlined (20 documents scans in the audited plan); the checkpointed
-    # table is two integers per doc.
+    # eager: sh's consumers run as concurrent stages and raced a lazy cache
+    materialize(sh, "yield_sh_mat", eager=True)
     w = words_sql("spark")
     toks = spark.sql(
         f"WITH docs AS ({_yield_docs_cte('spark')}) "
         f"SELECT doc_id, cast(size({w}) AS bigint) AS n_words FROM docs"
     )
-    toks.localCheckpoint(eager=True).createOrReplaceTempView("yield_toks_mat")
-    # r13 (VERDICT r12 #5), SIZE-GATED like ann_ivfpq's seams: above the
-    # 2 MB documents plan-size estimate the pair join — by far the
-    # dominant stage post-seam (19.9 executor-seconds) — runs on the two
-    # md5-derived bigints per shingle instead of the shingle STRING,
-    # and the df-cap becomes a broadcast ANTI-join against the tiny
-    # `hot` set instead of a SortMergeJoin against the vocabulary-sized
-    # `keep` set (the r12 plan shuffled the full shingle table BY
-    # STRING twice for it, once per jac consumer). Sort/join buffers
-    # hold 24-byte fixed-width rows — the same narrow-payload form
-    # minhash_estimate_error adopted in r10 (§2.3 shuffle fewer bytes).
-    # Exactness: i_hash >= i_true and the per-doc sizes count ROWS
-    # (string-distinct by construction), and the 0.5 cut is evaluated as
-    # the division-free 3·i >= sz_a+sz_b (monotone in i under ANY
-    # collision pattern), so the hash-scored pairs are a SUPERSET of
-    # the true >= 0.5 pairs (the grid's minimum); every survivor is
-    # re-verified with exact string Jaccard on shingle sets re-read
-    # from the checkpointed string table for JUST those docs. Output
-    # provably identical; no hash-collision exposure reaches the
-    # result. A/B: sf1 29.15 → 25.19 s median (2 rounds,
-    # AB_r13_batch1_sf1.json); at sf0.1 the three extra checkpoint
-    # jobs cost +1.55 s against a 2.4 s wall (AB_r13_batch1.json) —
-    # the same small-scale serialization loss as every Finding-1
-    # site, hence the gate (sf0.1 documents = 0.58 MB → inline path;
-    # sf1 = 5.8 MB → hash path).
-    from ..sources.tables import plan_size_bytes
-
-    docs_bytes = plan_size_bytes(
-        load_table(spark, sf_dir, "documents")
-    )
-    if docs_bytes is not None and docs_bytes < (2 << 20):
+    # eager: three consumers each re-ran the docs-union tokenize inlined
+    materialize(toks, "yield_toks_mat", eager=True)
+    # Above the size gate the pair join runs on two md5 bigints per
+    # shingle (OPTIMIZATION_r13.md, Finding 2). Exact: hash intersections
+    # only over-count and 3·i >= sz_a+sz_b is monotone in i, so the
+    # candidates are a superset of the true >= 0.5 pairs, and each one is
+    # re-verified with exact string Jaccard.
+    if not above_size_gate(load_table(spark, sf_dir, "documents")):
         return spark.sql(
             _yield_sql(
                 "spark", sh_src="yield_sh_mat", toks_src="yield_toks_mat"
@@ -266,16 +235,16 @@ def dedup_yield_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus AS (SELECT count(*) AS n FROM yield_toks_mat)
         SELECT g FROM df CROSS JOIN corpus
         WHERE n_docs * {_YC_DF_MULT} > n OR n_docs > {_YC_DF_ABS}
-    """).localCheckpoint(eager=True)
-    hot.createOrReplaceTempView("yield_hot_mat")
+    """)
+    materialize(hot, "yield_hot_mat", eager=True)
     hx = spark.sql("""
         SELECT /*+ BROADCAST(h) */ sh.doc_id,
                cast(conv(substr(md5(sh.g), 1, 15), 16, 10) AS bigint) AS h1,
                cast(conv(substr(md5(sh.g), 16, 13), 16, 10) AS bigint) AS h2
         FROM yield_sh_mat sh
         LEFT ANTI JOIN yield_hot_mat h ON sh.g = h.g
-    """).localCheckpoint(eager=True)
-    hx.createOrReplaceTempView("yield_hx_mat")
+    """)
+    materialize(hx, "yield_hx_mat", eager=True)
     cand = spark.sql("""
         WITH sizes AS (SELECT doc_id, count(*) AS sz
                        FROM yield_hx_mat GROUP BY doc_id),
@@ -291,8 +260,8 @@ def dedup_yield_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         JOIN sizes sa ON sa.doc_id = i.doc_a
         JOIN sizes sb ON sb.doc_id = i.doc_b
         WHERE 3 * i.i >= sa.sz + sb.sz
-    """).localCheckpoint(eager=True)
-    cand.createOrReplaceTempView("yield_cand_mat")
+    """)
+    materialize(cand, "yield_cand_mat", eager=True)
     # exact string re-verify, pruned to the candidate docs: shingle
     # strings come back from the checkpointed explode (no re-scan), the
     # same stop-gram filter applies, and the Jaccard quotient is the
@@ -321,8 +290,8 @@ def dedup_yield_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE size(array_intersect(a.gs, b.gs))
                 / cast(a.sz + b.sz - size(array_intersect(a.gs, b.gs))
                        AS double) >= 0.5
-    """).localCheckpoint(eager=True)
-    jac.createOrReplaceTempView("yield_jac_mat")
+    """)
+    materialize(jac, "yield_jac_mat", eager=True)
     return spark.sql(
         _yield_sql(
             "spark",

@@ -42,10 +42,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..materialize import materialize
 from ..sources.tables import (
+    above_size_gate,
     load_table,
     maybe_rebalance,
-    plan_size_bytes,
     rebalance_if_big,
 )
 from .llmdata20 import (
@@ -266,35 +267,16 @@ def ann_ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Companions: ann_ivf_cosine (same cells, raw-float ranking — the
     recall reference), embedding_quantize_int8 (scalar quantization),
     quantization_recall_probe (the recall-vs-compression audit)."""
-    # r12 tried forcing the widening exchange below the 2 MB gate (stage
-    # profile showed 3 serialized single-task PQ stages at sf0.1): +0.63 s
-    # median, worse in 6/6 alternating rounds — the exchange ships every
-    # vector and costs more than the freed parallelism at gate-scale
-    # (AB_r12_ivfpq_revert.json). Above the gate the rebalance fires anyway.
     emb = load_table(spark, sf_dir, "embeddings")
-    rebalance_if_big(emb, min_bytes=2 << 20).createOrReplaceTempView(
-        "embeddings"
-    )
-    # Size-gated materialization of the two windowed pipelines the
-    # template references twice each (r12, guide §2.4): `assign` (n x
-    # k-centroid cosine window — consumed by cells AND probes) and
-    # `codes` (n x 128 codeword L2 window — consumed by adc AND pqn)
-    # otherwise re-plan and re-run per reference; with the base scans
-    # below them, embeddings was scanned 14 times in one plan. The gate
-    # is the SAME 2 MB plan-size break-even as the rebalance above, and
-    # for the same reason, measured both ways: at sf0.1 the eager
-    # checkpoints serialize two jobs ahead of a query whose duplicated
-    # subtrees otherwise race across idle cores (+1.02 s median, 5/5
-    # rounds, AB_r12_ivfpq_seam_sf01.json), while at sf1 the deduped
-    # windows dominate (−0.47 s median, AB_r12_ivfpq_seam_sf1.json) and
-    # the gap grows with n (the n x k window is the asymptotic cost).
-    if (plan_size_bytes(emb) or 0) >= 2 << 20:
-        spark.sql(_pq_sql("spark", emit="assign")).localCheckpoint(
-            eager=True
-        ).createOrReplaceTempView("pq_assign_mat")
-        spark.sql(_pq_sql("spark", emit="codes")).localCheckpoint(
-            eager=True
-        ).createOrReplaceTempView("pq_codes_mat")
+    rebalance_if_big(emb).createOrReplaceTempView("embeddings")
+    # above the size gate the two twice-referenced windows (assign:
+    # cells + probes; codes: adc + pqn) are checkpointed once; below it
+    # the duplicated subtrees race faster than two blocking jobs
+    if above_size_gate(emb):
+        assign = spark.sql(_pq_sql("spark", emit="assign"))
+        materialize(assign, "pq_assign_mat", eager=True)
+        codes = spark.sql(_pq_sql("spark", emit="codes"))
+        materialize(codes, "pq_codes_mat", eager=True)
         return spark.sql(
             _pq_sql(
                 "spark", assign_src="pq_assign_mat", codes_src="pq_codes_mat"
@@ -454,15 +436,12 @@ def minhash_bbit_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = shingles_sql("spark", words_sql("spark"), _ME_N)
     h1 = "cast(conv(substr(md5(sh.g), 1, 15), 16, 10) AS bigint)"
     h2 = "cast(conv(substr(md5(sh.g), 16, 13), 16, 10) AS bigint)"
-    # the raw shingle explode feeds both the df aggregation and the
-    # kept-rows join side of the hd build — materialized once, like
-    # llmdata20.minhash_estimate_error (r12: the two subtrees raced the
-    # full explode pre-checkpoint)
+    # eager: as in minhash_estimate_error
     sh = spark.sql(
         f"WITH docs AS (SELECT doc_id, text FROM documents) "
         f"SELECT doc_id, explode({grams}) AS g FROM docs"
-    ).localCheckpoint(eager=True)
-    sh.createOrReplaceTempView("bbit_sh_mat")
+    )
+    materialize(sh, "bbit_sh_mat", eager=True)
     hd = spark.sql(f"""
 WITH df AS (SELECT g, count(*) AS n_docs FROM bbit_sh_mat GROUP BY g),
 corpus AS (SELECT count(*) AS n FROM documents),
@@ -473,11 +452,6 @@ keep AS (
 SELECT sh.doc_id, {h1} AS h1, {h2} AS h2
 FROM bbit_sh_mat sh JOIN keep ON sh.g = keep.g
 """)
-    # eager localCheckpoint, not persist: the consumer's subtrees (sigw,
-    # sizes, both pair-join sides) run as CONCURRENT stages and each
-    # recomputed the explode+md5+conv pipeline under the racing cache
-    # (r12 stage profile: 16.4 + 12.1 + 11.2 executor-seconds); the
-    # checkpointed blocks are referenced structurally, so the pipeline
-    # runs exactly once (see llmdata20.minhash_estimate_error).
-    hd.localCheckpoint(eager=True).createOrReplaceTempView("bbit_hd_mat")
+    # eager: as in minhash_estimate_error
+    materialize(hd, "bbit_hd_mat", eager=True)
     return spark.sql(_bbit_sql("spark", shf_src="bbit_hd_mat"))

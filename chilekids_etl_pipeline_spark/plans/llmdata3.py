@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import stop_hits_sql, words_sql
+from ..materialize import materialize
 from ..sources.tables import load_table, maybe_rebalance
 from ..functions.contamination import bench_grams_cte as _bench_grams_cte
 from .registry import register
@@ -681,19 +682,13 @@ def training_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     packing — the training-data twin of elt_end_to_end. Catalyst prunes
     columns/pushes filters across stage boundaries, and the stages shuffle
     on different keys exactly once each (content hash → doc_id → lang →
-    source). The dedup survivors table is consumed TWICE (gram explosion
-    and the keep side of the anti join); CTEs inline in Spark, so it is
-    materialized once via persist — without it the quality+dedup stages
-    run twice over the corpus. This is the shape a 100 TB curation job
-    actually runs as."""
+    source). The dedup survivors view is consumed twice (gram explosion
+    and the keep side of the anti join); a persist of it was never read
+    by the executed plan, so it is not pinned. This is the shape a 100 TB
+    curation job actually runs as."""
     load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    # repartition before persisting: the single-row-group parquet scan
-    # yields one split, and the persisted survivors inherit partitioning —
-    # without the rebalance the whole gram-explosion stage runs on one
-    # task (at cluster scale, file layout provides this)
-    # lazy persist (eager localCheckpoint A/B-measured slower here,
-    # AB_r12_batch2 — racing recomputes overlap; see dedup_minhash_lsh)
-    dedup = maybe_rebalance(spark.sql(_pipeline_dedup_sql("spark"))).persist()
+    # widened: the one-split scan would run the gram explosion on one task
+    dedup = maybe_rebalance(spark.sql(_pipeline_dedup_sql("spark")))
     dedup.createOrReplaceTempView("dedup_docs")
     return spark.sql(_pipeline_rest_sql("spark", "dedup_docs"))
 
@@ -821,9 +816,9 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit = _docs_aug_spark(spark, sf_dir).filter(
         (F.col("doc_id") % PLANT_SENTINEL) % _RECALL_SAMPLE_DENOM == 0
     )
-    sh = drop_hot_shingles(
-        shingle_rows(audit), df_cap_abs=_recall_df_cap()
-    ).persist()
+    # lazy: the exact side and the band index both read sh
+    sh = drop_hot_shingles(shingle_rows(audit), df_cap_abs=_recall_df_cap())
+    sh = materialize(sh, "recall_sh_mat", eager=False)
     exact = jaccard_pairs(sh, 0.5).select("doc_a", "doc_b")
     cand = lsh_candidate_pairs(minhash_bands(sh, num_hashes=12, band_size=3))
     hits = exact.join(cand, ["doc_a", "doc_b"])

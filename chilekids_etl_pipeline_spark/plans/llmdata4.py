@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import bpe_token_count_sql, shingles_sql, words_sql
+from ..materialize import materialize
 from ..sources.tables import load_table, maybe_rebalance
 from .registry import register
 
@@ -181,12 +182,8 @@ def split_leakage_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = spark.sql(
         f"SELECT doc_id, explode({grams_expr}) AS g FROM documents"
     )
-    # lazy persist, deliberately: an eager localCheckpoint A/B-measured
-    # +1.29 s median here (AB_r12_batch2) — the racing consumer
-    # recomputes overlap across cores and beat serialized
-    # materialization (contrast minhash_estimate_error, where the
-    # duplicated md5+conv work dominated and the checkpoint won).
-    grams.persist().createOrReplaceTempView("leak_grams_mat")
+    # lazy: the train and eval sides race it, faster than a checkpoint
+    materialize(grams, "leak_grams_mat", eager=False)
     return spark.sql(_leakage_sql("spark", grams_src="leak_grams_mat"))
 
 
@@ -349,12 +346,9 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     maybe_rebalance(
         load_table(spark, sf_dir, "embeddings")
     ).createOrReplaceTempView("embeddings")
-    # eager localCheckpoint, not persist: norms feeds the cell assignment
-    # AND the cell-vector join as concurrent stages (cache race — see
-    # llmdata20.minhash_estimate_error); the checkpointed df is used for
-    # BOTH consumers so they share the materialized blocks.
-    norms = spark.sql(_sem_norms_sql("spark")).localCheckpoint(eager=True)
-    norms.createOrReplaceTempView("sem_norms_mat")
+    # eager: the cell assignment and the cell-vector join race a lazy cache
+    norms = spark.sql(_sem_norms_sql("spark"))
+    norms = materialize(norms, "sem_norms_mat", eager=True)
     cells = spark.sql(_sem_cells_sql("spark", norms_src="sem_norms_mat"))
     cellvecs = norms.join(cells, "vec_id")
     thr = _SEM_THRESHOLD
@@ -524,9 +518,8 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     grams = spark.sql(
         f"SELECT doc_id, explode({grams_expr}) AS g FROM documents"
     )
-    # lazy persist: eager localCheckpoint A/B-measured +0.56 s median
-    # (AB_r12_batch2, same verdict as split_leakage_check)
-    grams.persist().createOrReplaceTempView("novelty_grams_mat")
+    # lazy: as in split_leakage_check
+    materialize(grams, "novelty_grams_mat", eager=False)
     return spark.sql(_novelty_sql("spark", grams_src="novelty_grams_mat"))
 
 

@@ -16,7 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import words_sql
-from ..sources.tables import load_table, maybe_rebalance
+from ..materialize import materialize
+from ..sources.tables import above_size_gate, load_table, maybe_rebalance
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -129,30 +130,18 @@ def exact_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     never O(corpus²); the run grouping shuffles once on (pair, diag).
 
     Perf: the grams CTE is referenced three times (df, both join
-    sides) — materialized once on the Spark side so SQL inlining does
-    not re-explode the corpus (the CTE-inlining lesson from
-    minhash_containment, 9.8→2 s)."""
+    sides); above the size gate it is checkpointed once so SQL inlining
+    does not re-explode the corpus."""
     raw = load_table(spark, sf_dir, "documents")
-    docs = maybe_rebalance(raw)
-    docs.createOrReplaceTempView("documents")
+    maybe_rebalance(raw).createOrReplaceTempView("documents")
+    if not above_size_gate(raw):
+        return spark.sql(_substring_sql("spark"))
+    # eager above the size gate, where the triplicated positional-gram
+    # explode dominates; below it racing recomputes were faster
     grams = spark.sql(
         f"WITH docs AS ({_sub_docs_cte('spark')}) {_sub_pos_grams('spark')}"
     )
-    # size-gated materialization (the ann_ivfpq_adc seam pattern): at
-    # sf0.1 an eager localCheckpoint measured +0.17 s median
-    # (AB_r12_batch2) — racing recomputes overlap across idle cores —
-    # but at sf1 the verdict FLIPS: −0.76 s median, checkpoint better
-    # 3/3 alternating rounds (AB_r12_ckpt_sf1.json), because the
-    # triplicated positional-gram explode dominates once cores are
-    # saturated. Same 2 MB plan-size gate as the scan rebalance, so the
-    # same corpus always takes the same plan.
-    from ..sources.tables import plan_size_bytes
-
-    if (plan_size_bytes(raw) or 0) >= 2 << 20:
-        grams = grams.localCheckpoint(eager=True)
-    else:
-        grams = grams.persist()
-    grams.createOrReplaceTempView("sub_grams_mat")
+    materialize(grams, "sub_grams_mat", eager=True)
     return spark.sql(_substring_sql("spark", grams_src="sub_grams_mat"))
 
 
@@ -401,10 +390,8 @@ def record_linkage_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(w_rev).alias("rn_rev"),
         *lead_cols,
     )
-    # lazy persist: eager localCheckpoint A/B-measured +0.32 s median
-    # here (AB_r12_batch3) — the racing body/strip recomputes overlap
-    # across cores and beat the serialized materialization barrier.
-    ranked.persist()
+    # lazy: the body and strip consumers race it, faster than a checkpoint
+    ranked = materialize(ranked, "linkage_ranked_mat", eager=False)
 
     def _explode_pairs(df):
         return (

@@ -80,35 +80,39 @@ def maybe_rebalance(df: DataFrame, force: bool = False) -> DataFrame:
     return df.repartition(spark.sparkContext.defaultParallelism)
 
 
-def rebalance_if_big(df: DataFrame, min_bytes: int) -> DataFrame:
-    """Size-gated ``maybe_rebalance``: skip the widening exchange when the
-    scan is too small to amortize the stage barrier it adds.
+# The one size gate of the query plans: a relation whose plan-time size
+# estimate (parquet file bytes for a bare scan) reaches this takes the
+# "big" physical form — the widening exchange of ``rebalance_if_big``,
+# the eager materialization seams of ann_ivfpq_adc, exact_substring_dedup
+# and dedup_yield_curve. Below it those forms measured as pure
+# stage-barrier loss at sf0.1 and wins at sf1 (OPTIMIZATION_r13.md,
+# "Size gate"). Tests force the big branch by monkeypatching this to 0.
+SIZE_GATE_BYTES = 2 << 20
 
-    The exchange costs a roughly fixed ~0.3-0.5 s of barrier + task
-    scheduling at local[32] regardless of data volume, while its benefit
-    scales with bytes-per-core of downstream work — so for thin inputs it
-    is pure loss (r10 alternating A/B at sf0.1, AB_r8_vs_r10.json:
-    knn_topk_cosine +0.45 s, ann_ivf_cosine +0.64 s, elt_end_to_end
-    +0.36 s of the widening/count cost on sub-2 MB scans) and for fat
-    ones it is the difference between 2 and 32 busy cores (sf1 wins of
-    1.4-2.3x recorded at the call sites). ``min_bytes`` is the call
-    site's break-even, compared against the relation's plan-time size
-    estimate (parquet file bytes — no job, no execution). On a real
-    cluster ``maybe_rebalance`` is a no-op anyway; this gate only tunes
-    the degenerate local layouts.
-    """
+
+def above_size_gate(df: DataFrame) -> bool:
+    """True when ``df``'s plan-time size estimate reaches
+    ``SIZE_GATE_BYTES``. An unknown size counts as below the gate, so an
+    estimate failure falls back to the plain inline plan. No job runs."""
     size = plan_size_bytes(df)
-    if size is not None and size < min_bytes:
-        return df
-    return maybe_rebalance(df)
+    return size is not None and size >= SIZE_GATE_BYTES
+
+
+def rebalance_if_big(df: DataFrame) -> DataFrame:
+    """Size-gated ``maybe_rebalance``: skip the widening exchange when the
+    scan is below the size gate, where the ~0.3-0.5 s stage barrier it
+    adds is not paid back (r10 A/B at sf0.1, AB_r8_vs_r10.json); above
+    it the widening is the difference between 2 and all busy cores. On a
+    real cluster ``maybe_rebalance`` is a no-op anyway; this gate only
+    tunes the degenerate local layouts."""
+    return maybe_rebalance(df) if above_size_gate(df) else df
 
 
 def plan_size_bytes(df: DataFrame) -> int | None:
     """Plan-time size estimate of a relation (parquet file bytes for a
-    bare scan) — no job, no execution. The break-even input for the
-    size-gated physical choices (``rebalance_if_big``, ann_ivfpq's
-    materialization seams): deterministic for a given input layout, so
-    the same data always takes the same plan."""
+    bare scan) — no job, no execution. The input of ``above_size_gate``:
+    deterministic for a given input layout, so the same data always
+    takes the same plan."""
     try:
         return int(
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
